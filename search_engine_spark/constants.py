@@ -70,8 +70,6 @@ N_DOC_SHARDS = 32
 # Max postings per compressed block inside one (term, shard) row; block-max
 # metadata is kept per block for WAND-style skipping.
 BLOCK_SIZE = 128
-# Salt fan-out for the two-stage hot-term aggregation during index build.
-AGG_SALT = 16
 # Term buckets: the unit of sink commit/resume/lineage (sink.py). Bucket =
 # crc32(term) % N_TERM_BUCKETS — crc32 because zlib.crc32 matches Spark's
 # F.crc32, letting the query driver prune buckets without a Spark job.

@@ -4,12 +4,31 @@ Two physical paths, identical results:
 
 1. ``bm25_topk_df`` — pure DataFrame over the uncompressed postings
    (oracle-parity path, DuckDB-checkable).
-2. ``bm25_topk_blocks`` — over the compressed block index: per-shard
-   block-max pruning + exact rescore inside one ``applyInPandas``
-   (Arrow), then a global TakeOrderedAndProject. This is the scale path:
-   each shard task touches only the query terms' blocks for its document
-   subset, skips blocks that provably cannot reach the top-k, and emits
-   at most k rows.
+2. ``bm25_topk_blocks`` — over the compressed block index, usually the
+   bucket-pruned scan of ``IndexSink.blocks_for_terms``, whose file
+   listing the sink keeps until the index's files change. One shard closure
+   (``_score_shard_factory``: block-max pruning + exact rescore, at most
+   k rows per shard) scores each shard's block rows, then a global
+   (score DESC, doc_id ASC) top-k merges the shards. The closure runs on
+   one of two routes, chosen from the query's postings: Σ df over its
+   terms, which the tstats lookup has already returned.
+
+   * driver route — at most ``DRIVER_MAX_POSTINGS``: one Arrow
+     ``toPandas`` of the pruned block rows, the closure per shard on the
+     driver, and a local result (collecting it starts no Spark job). A
+     small query's cost is otherwise Spark's fixed per-job overhead, not
+     decoding.
+   * distributed route — above it: one ``groupBy("shard").applyInPandas``
+     of the same closure, then a TakeOrderedAndProject. Each shard task
+     touches only its documents' blocks of the query terms.
+
+   The limit is the measured point where the driver route stops winning
+   (tools/route_crossover.py). Both routes run the same closure on the
+   same per-shard rows with the same tie-break, so they are
+   bit-identical by construction.
+   ``phrase_topk_blocks`` picks its route the same way, against
+   ``DRIVER_MAX_PHRASE_POSTINGS``; ``bm25_topk_batch`` always runs
+   distributed.
 
 Rank identity (BASELINE.json north_star): scores are float64 with a FIXED
 accumulation order — per doc, term contributions are summed in ascending
@@ -344,6 +363,35 @@ def _score_shard_factory(
     return score_shard
 
 
+# Route rule of the block paths: a closure scores a query's pruned block
+# set on the driver while its postings (Σ df over the query's terms, known
+# from the tstats lookup) are at most its limit here, and in one
+# applyInPandas job above it. Each limit is the largest Σ df at which the
+# driver route still won in every sweep of tools/route_crossover.py
+# (4-core VM, 2,000- and 20,000-doc indexes): BM25 won up to 409k
+# postings and lost from 509k; a phrase posting costs more (positions are
+# decoded too), and phrases won up to 29k on both indexes and lost at 41k
+# on the smaller. Tests set the limits to -1 to force applyInPandas.
+DRIVER_MAX_POSTINGS = 400_000
+DRIVER_MAX_PHRASE_POSTINGS = 30_000
+
+
+def _score_shards_on_driver(idx: DataFrame, score_shard, k: int, schema: str) -> DataFrame:
+    """The driver route of the block paths: one Arrow collect of the
+    pruned block rows, then ``score_shard`` over each shard's frame — the
+    closure and the per-shard rows applyInPandas would hand it — and the
+    same global (score DESC, doc_id ASC) top-k. The result is a local
+    DataFrame built from pandas (a LocalRelation), so collecting it starts
+    no Spark job."""
+    spark = idx.sparkSession
+    parts = [score_shard(g.reset_index(drop=True)) for _s, g in idx.toPandas().groupby("shard")]
+    if not parts:
+        return spark.createDataFrame([], schema)
+    out = pd.concat(parts, ignore_index=True)
+    order = np.lexsort((out["doc_id"].to_numpy(), -out["score"].to_numpy()))[:k]
+    return spark.createDataFrame(out.iloc[order].reset_index(drop=True), schema)
+
+
 def bm25_topk_blocks(
     index_df: DataFrame,
     tstats: DataFrame,
@@ -372,10 +420,11 @@ def bm25_topk_blocks(
     idx = index_df.where(F.col("term").isin(list(idf_by_term))).select(
         "term", "shard", "block_id", "doc_bytes", "tf_bytes", "dl_bytes", "uf_bytes", "max_wtf"
     )
-    shard_topk = idx.groupBy("shard").applyInPandas(
-        _score_shard_factory(idf_by_term, weight, k, float(avgdl), float(wtf_scale)),
-        schema="doc_id long, score double",
-    )
+    score_shard = _score_shard_factory(idf_by_term, weight, k, float(avgdl), float(wtf_scale))
+    schema = "doc_id long, score double"
+    if sum(dfs[t] for t in idf_by_term) <= DRIVER_MAX_POSTINGS:
+        return _score_shards_on_driver(idx, score_shard, k, schema)
+    shard_topk = idx.groupBy("shard").applyInPandas(score_shard, schema=schema)
     return shard_topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
@@ -711,9 +760,10 @@ def phrase_topk_blocks(
     indexes / oracle parity); otherwise ``phrase`` goes through
     normalize_phrase (stemmed production path). Plan shape: one block
     scan filtered to the phrase's distinct terms (bucket-prunable via
-    sink.blocks_for_terms), ONE per-shard applyInPandas, one ≤|shards|·k
-    row TakeOrderedAndProject — positions never cross the exchange for
-    any term outside the phrase."""
+    sink.blocks_for_terms), the phrase closure per shard — on the driver
+    or in ONE applyInPandas, by the route rule of bm25_topk_blocks — and
+    one ≤|shards|·k row top-k; positions are never read for any term
+    outside the phrase."""
     spark = index_df.sparkSession
     if terms is None:
         terms = normalize_phrase(phrase or "")
@@ -733,10 +783,11 @@ def phrase_topk_blocks(
         "term", "shard", "block_id", "doc_bytes", "tf_bytes", "dl_bytes",
         "uf_bytes", "pos_bytes", "plen_bytes",
     )
-    out = idx.groupBy("shard").applyInPandas(
-        _phrase_shard_factory(terms, idf_by_term, float(avgdl), k),
-        schema="doc_id long, n_occurrences long, first_pos long, score double",
-    )
+    match_shard = _phrase_shard_factory(terms, idf_by_term, float(avgdl), k)
+    schema = "doc_id long, n_occurrences long, first_pos long, score double"
+    if sum(dfs.values()) <= DRIVER_MAX_PHRASE_POSTINGS:
+        return _score_shards_on_driver(idx, match_shard, k, schema)
+    out = idx.groupBy("shard").applyInPandas(match_shard, schema=schema)
     return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 

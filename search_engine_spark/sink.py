@@ -227,6 +227,7 @@ class IndexSink:
         self.root = root
         self.n_buckets = n_buckets
         self.n_doc_buckets = n_doc_buckets
+        self._snap = None  # see _snapshot
 
     # -- write path ---------------------------------------------------------
 
@@ -458,7 +459,7 @@ class IndexSink:
                     enriched.unpersist()
                     postings_raw.unpersist()
                     return {"status": "failed_injected", "waves_done": wi}
-                t0 = time.perf_counter()
+                t_wave = time.perf_counter()
                 wave_df = enriched.where(F.col("bucket").isin(wave))
                 # ONE exchange does double duty: partitioning on
                 # (bucket, shard-group) both salts the encode (a hot
@@ -503,7 +504,7 @@ class IndexSink:
                 phase_t["lineage_readback"] = phase_t.get("lineage_readback", 0.0) + (
                     time.perf_counter() - t_l
                 )
-                wall_ms = int((time.perf_counter() - t0) * 1000)
+                wall_ms = int((time.perf_counter() - t_wave) * 1000)
                 for b in wave:
                     src = os.path.join(tmp, f"bucket={b}")
                     dst = os.path.join(blocks_root, f"bucket={b}")
@@ -591,17 +592,51 @@ class IndexSink:
 
     # -- read path ----------------------------------------------------------
 
+    def _read_blocks(self, spark: SparkSession) -> DataFrame:
+        blocks_root = os.path.join(self.root, "blocks")
+        return spark.read.option("basePath", blocks_root).parquet(blocks_root)
+
+    def _stamp(self) -> tuple:
+        """Identity of what the read snapshot lists: meta.json, the tstats
+        dir and every entry of blocks/ and docs/ (bucket dirs, or a flat
+        docs table's files). Build waves, fold swaps and both commits
+        replace these by renames, which give the path a new inode, so a
+        fold that crashed after its bucket swaps — or is still running —
+        invalidates the snapshot as surely as a commit. n_buckets +
+        n_doc_buckets + 2 stats; no Spark listing."""
+        paths = [os.path.join(self.root, p) for p in ("meta.json", "tstats")]
+        for sub in ("blocks", "docs"):
+            with os.scandir(os.path.join(self.root, sub)) as it:
+                paths += sorted(e.path for e in it)
+        out = []
+        for p in paths:
+            try:
+                st = os.stat(p)
+            except FileNotFoundError:  # renamed away by a swap in flight
+                out.append((p, None))
+                continue
+            out.append((p, st.st_ino, st.st_mtime_ns, st.st_size))
+        return tuple(out)
+
+    def _snapshot(self, spark: SparkSession):
+        """(blocks, tstats, docs, meta), read once per Spark session and
+        reused while ``_stamp`` is unchanged. Each ``spark.read.parquet``
+        lists its table's files on the driver; a warm query should pay
+        for none of them."""
+        stamp = self._stamp()
+        snap = self._snap
+        if snap is None or snap[0] is not spark or snap[1] != stamp:
+            with open(os.path.join(self.root, "meta.json")) as f:
+                meta = json.load(f)
+            tstats = spark.read.parquet(os.path.join(self.root, "tstats"))
+            snap = (spark, stamp, self._read_blocks(spark), tstats, self.docs(spark), meta)
+            self._snap = snap
+        return snap[2:]
+
     def read(self, spark: SparkSession):
-        meta = json.load(open(os.path.join(self.root, "meta.json")))
-        blocks = spark.read.option("basePath", os.path.join(self.root, "blocks")).parquet(
-            os.path.join(self.root, "blocks")
-        )
-        tstats = spark.read.parquet(os.path.join(self.root, "tstats"))
+        blocks, tstats, docs, meta = self._snapshot(spark)
         # doclen lives in the docs side table (written first, one pass)
-        dstats = spark.read.parquet(os.path.join(self.root, "docs")).select(
-            "doc_id", "doclen"
-        )
-        return blocks, tstats, dstats, meta
+        return blocks, tstats, docs.select("doc_id", "doclen"), meta
 
     def docs(self, spark: SparkSession) -> DataFrame:
         """The doc-metadata side table (doc_id + every non-content input
@@ -642,7 +677,7 @@ class IndexSink:
         from .query import bm25_topk_blocks, normalize_query
         from .tokenize import tokenize
 
-        blocks, tstats, _dstats, meta = self.read(spark)
+        blocks, tstats, docs, meta = self._snapshot(spark)
         terms, _w = normalize_query(query)
         idx = self.blocks_for_terms(spark, terms) if terms else blocks
         topk = bm25_topk_blocks(
@@ -651,7 +686,7 @@ class IndexSink:
         )
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
         ranked = topk.withColumn("rank", F.row_number().over(w))
-        out = self.docs(spark).join(F.broadcast(ranked), "doc_id")
+        out = docs.join(F.broadcast(ranked), "doc_id")
         if corpus is not None and terms:
             # tokenize ONLY the k result docs (broadcast semi-join prunes
             # the scan); stems must match the index's term space, so the
@@ -695,16 +730,17 @@ class IndexSink:
         """Partition-pruned scan: only the buckets owning ``terms`` are read
         (driver-side crc32 mirrors the write path's bucket expression)."""
         buckets = sorted({term_bucket_py(t, self.n_buckets) for t in terms})
-        blocks, *_ = self.read(spark)
+        blocks, *_ = self._snapshot(spark)
         return blocks.where(F.col("bucket").isin(buckets)).where(
             F.col("term").isin(terms)
         )
 
     def verify(self, spark: SparkSession) -> list[int]:
         """Re-derive each committed bucket's content hash from the files on
-        disk and diff against the manifest. Returns mismatched buckets."""
-        blocks, *_ = self.read(spark)
-        actual = _bucket_lineage(blocks)
+        disk and diff against the manifest. Returns mismatched buckets.
+        Lists the files afresh, never from the read snapshot: an integrity
+        check reads what is on disk now."""
+        actual = _bucket_lineage(self._read_blocks(spark))
         bad = []
         for entry in read_manifest(self.root):
             b = entry["bucket"]

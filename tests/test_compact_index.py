@@ -24,8 +24,8 @@ from pyspark.sql import functions as F
 
 from search_engine_spark.corpus import generate_corpus, with_doc_id
 from search_engine_spark.index import doc_postings
-from search_engine_spark.query import bm25_topk_blocks
-from search_engine_spark.sink import IndexSink, wtf_scale_of
+from search_engine_spark.query import bm25_topk_blocks, normalize_query
+from search_engine_spark.sink import IndexSink, read_manifest, wtf_scale_of
 from search_engine_spark.streaming import (
     compact_into_index,
     decode_block_postings,
@@ -69,6 +69,18 @@ def _topk(spark, sink, q, k=10):
         for r in bm25_topk_blocks(
             blocks, tstats, meta["N"], meta["avgdl"], q, k=k,
             wtf_scale=wtf_scale_of(meta),
+        ).collect()
+    ]
+
+
+def _pruned_topk(spark, sink, q, k=10):
+    """The serving path: the bucket-pruned scan from the sink's snapshot."""
+    _b, tstats, _d, meta = sink.read(spark)
+    return [
+        (r["doc_id"], r["score"])
+        for r in bm25_topk_blocks(
+            sink.blocks_for_terms(spark, normalize_query(q)[0]), tstats,
+            meta["N"], meta["avgdl"], q, k=k, wtf_scale=wtf_scale_of(meta),
         ).collect()
     ]
 
@@ -124,6 +136,7 @@ def test_compact_into_index_equals_rebuild(spark, tmp_path):
     sink = IndexSink(str(tmp_path / "idx"), n_buckets=N_BUCKETS)
     sink.build(batch, url_cols=None)
     pre = _bucket_hashes(sink.root)
+    assert _pruned_topk(spark, sink, QUERIES[0])  # the sink now holds a snapshot
 
     corpus_dir = str(tmp_path / "in")
     store = str(tmp_path / "store")
@@ -166,11 +179,33 @@ def test_compact_into_index_equals_rebuild(spark, tmp_path):
     assert meta1["encoded_avgdl"] != meta1["avgdl"]  # stats advanced, encode pinned
     for qs in QUERIES:
         assert _topk(spark, sink, qs) == _topk(spark, sink2, qs), qs
+        # the snapshot taken before the fold was refreshed by its commit
+        fresh = IndexSink(sink.root, n_buckets=N_BUCKETS)
+        assert _pruned_topk(spark, sink, qs) == _pruned_topk(spark, fresh, qs), qs
 
     # lineage verifies; folded docs leave the live store; replay is a no-op
     assert sink.verify(spark) == []
     assert read_live_postings(spark, store).count() == 0
     assert compact_into_index(spark, sink, store)["status"] == "noop"
+
+    # verify() reads the disk, not the snapshot: a bucket file removed
+    # behind an unchanged meta.json is caught
+    meta_path = os.path.join(sink.root, "meta.json")
+
+    def meta_stamp():
+        st = os.stat(meta_path)
+        return st.st_ino, st.st_mtime_ns, st.st_size
+
+    stamp = meta_stamp()
+    victim = max(read_manifest(sink.root), key=lambda e: e["n_blocks"])["bucket"]
+    bdir = os.path.join(sink.root, "blocks", f"bucket={victim}")
+    part = max(
+        (f for f in os.listdir(bdir) if f.endswith(".parquet")),
+        key=lambda f: os.path.getsize(os.path.join(bdir, f)),
+    )
+    os.remove(os.path.join(bdir, part))
+    assert meta_stamp() == stamp
+    assert sink.verify(spark) == [victim]
     batch.unpersist()
 
 
@@ -336,6 +371,50 @@ def test_compact_replay_after_docs_swap_crash(spark, tmp_path):
         assert _topk(spark, sink, qs) == _topk(spark, sink2, qs), qs
     # and the replay marked the commits folded: next call is a clean noop
     assert compact_into_index(spark, sink, store)["status"] == "noop"
+
+
+def test_read_snapshot_survives_crashed_fold(spark, tmp_path, monkeypatch):
+    """A sink's read snapshot must not outlive the files it lists. A fold
+    that crashes after its bucket and docs swaps but before the
+    tstats/meta commit leaves meta.json as it was; queries through the
+    IndexSink that held the pre-fold snapshot must keep working and see
+    what a fresh IndexSink on the same root sees — before the replay and
+    after it."""
+    import pytest
+
+    from search_engine_spark.sink import term_bucket_py
+    from search_engine_spark.streaming import jobs
+
+    sink = IndexSink(str(tmp_path / "idx"), n_buckets=8)
+    sink.build(_mk(spark, _NARROW), url_cols=None)
+    assert _pruned_topk(spark, sink, QUERIES[0])  # the sink now holds a snapshot
+    meta_path = os.path.join(sink.root, "meta.json")
+    meta_before = open(meta_path).read()
+
+    def crash(*_a, **_kw):
+        raise RuntimeError("injected crash before the tstats/meta commit")
+
+    monkeypatch.setattr(jobs, "_refresh_index_side_tables", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        _stream_and_fold(spark, tmp_path, sink, _CHANGED_V2 + _NEW)
+    monkeypatch.undo()
+    assert open(meta_path).read() == meta_before
+    touched = jobs._read_fold_txn(sink.root)
+    assert any(
+        term_bucket_py(t, 8) in touched for q in QUERIES for t in normalize_query(q)[0]
+    )  # the queries read swapped buckets
+
+    def same_as_fresh():
+        fresh = IndexSink(sink.root, n_buckets=8)
+        for qs in QUERIES:
+            assert _pruned_topk(spark, sink, qs) == _pruned_topk(spark, fresh, qs), qs
+            got = sink.search_results(spark, qs).select("doc_id", "repo", "path").collect()
+            assert got == fresh.search_results(spark, qs).select("doc_id", "repo", "path").collect()
+
+    same_as_fresh()
+    store = str(tmp_path / "store_ckpt")
+    assert compact_into_index(spark, sink, store)["status"] == "folded_empty"
+    same_as_fresh()
 
 
 def _dir_hashes(root, sub, prefix):

@@ -14,6 +14,7 @@ from __future__ import annotations
 import pytest
 
 from search_engine_spark import constants as C
+from search_engine_spark import query as Q
 from search_engine_spark.index import (
     build_block_index,
     corpus_stats,
@@ -75,6 +76,31 @@ def test_block_phrase_bit_identical_to_df_twin(built, terms):
     ]
     # exact equality: doc ids, n_occurrences, first_pos AND float64 scores
     assert blk == df, f"block phrase path diverges from DataFrame twin for {terms}"
+
+
+def test_phrase_routes_bit_identical(built, monkeypatch):
+    """phrase_topk_blocks runs its phrase closure on the driver for small
+    block sets and with applyInPandas otherwise: identical (doc_id,
+    n_occurrences, first_pos, score) rows on both routes, for every
+    phrase case, the empty phrase, and k=1 truncation."""
+    _toks, _p, _d, tstats, N, avgdl, blocks = built
+    cases = [(terms, k) for terms in PHRASES + [[], ["beta"]] for k in (50, 1)]
+
+    def run():
+        out = []
+        for t, k in cases:
+            df = phrase_topk_blocks(blocks, tstats, N, avgdl, terms=t, k=k)
+            out.append((df.isLocal(), [tuple(r) for r in df.collect()]))
+        return out
+
+    driver = run()
+    monkeypatch.setattr(Q, "DRIVER_MAX_PHRASE_POSTINGS", -1)  # forces applyInPandas
+    dist = run()
+    for case, (d_local, d_rows), (x_local, x_rows) in zip(cases, driver, dist):
+        assert d_rows == x_rows, f"routes diverge for {case}"
+        if d_rows:
+            assert d_local and not x_local, case  # each route was taken
+    assert any(len(rows) == 1 for _l, rows in driver)
 
 
 def test_match_stats_semantics(built):

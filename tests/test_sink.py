@@ -154,6 +154,11 @@ def test_build_resume_identical(spark, raw_corpus, tmp_path_factory):
     # single-shot build
     r1 = IndexSink(single, n_buckets=N_BUCKETS).build(raw_corpus, buckets_per_wave=3)
     assert r1["status"] == "committed" and r1["built"] == N_BUCKETS
+    # encode_commit spans every wave, not just the last (0.005 s: the
+    # phase timings are rounded to 0.01 s)
+    wave_ms = {e["wave"]: e["wall_ms"] for e in read_manifest(single)}
+    assert len(wave_ms) > 1
+    assert r1["meta"]["phase_timings_s"]["encode_commit"] >= sum(wave_ms.values()) / 1000 - 0.005
 
     # crashed build: only 1 wave (3 of 8 buckets) commits
     sink2 = IndexSink(resumed, n_buckets=N_BUCKETS)
@@ -288,6 +293,41 @@ def test_batch_query_bit_identical_to_per_query(spark, built):
             for i, r in enumerate(bm25_topk_blocks(blocks, tstats, N, avgdl, q, k=50).collect())
         ]
         assert got.get(qid, []) == expected, f"batch diverges for {qid}={q!r}"
+
+
+def test_block_routes_bit_identical(spark, built, monkeypatch):
+    """bm25_topk_blocks scores small pruned block sets on the driver and
+    larger ones with applyInPandas; both run the same shard closure, so
+    the reference queries (absent-term, all-stopword and empty queries
+    included) return identical (doc_id, score) lists on either route. A
+    small k truncates the hot queries' candidate sets."""
+    from search_engine_spark import query as Q
+    from search_engine_spark.corpus import reference_queries
+    from search_engine_spark.query import normalize_query
+
+    sink, _root = built
+    blocks, tstats, _d, meta = sink.read(spark)
+    N, avgdl = meta["N"], meta["avgdl"]
+    queries = [q for _qid, q in reference_queries()] + ["", "zzzmissing"]
+
+    def run():
+        out = {}
+        for q in queries:
+            terms = normalize_query(q)[0]
+            idx = sink.blocks_for_terms(spark, terms) if terms else blocks
+            df = bm25_topk_blocks(idx, tstats, N, avgdl, q, k=10)
+            out[q] = (df.isLocal(), [(r["doc_id"], r["score"]) for r in df.collect()])
+        return out
+
+    driver = run()
+    monkeypatch.setattr(Q, "DRIVER_MAX_POSTINGS", -1)  # forces applyInPandas
+    dist = run()
+    for q in queries:
+        assert driver[q][1] == dist[q][1], f"routes diverge for {q!r}"
+        if driver[q][1]:
+            assert driver[q][0] and not dist[q][0], q  # each route was taken
+    assert any(len(rows) == 10 for _l, rows in driver.values())
+    assert any(not rows for _l, rows in driver.values())
 
 
 def test_search_results_assembly(spark, built):
